@@ -22,8 +22,8 @@ literals, and tests flip it by perturbing the seed.
 Scale: each trial is the trainer's data-parallel epoch loop (narrow
 scan + parameter-width reduction); the search loop is driver-side
 control flow only — the exact shape MLlib's CrossValidator uses, minus
-its partitioning-dependent randomSplit folds (our trials share ONE
-persisted feature frame and need no folds: full-batch loss is exact).
+its partitioning-dependent randomSplit folds (each trial pins its own
+feature frame and needs no folds: full-batch loss is exact).
 Trials are embarrassingly parallel across a cluster if launched as
 concurrent jobs; at this net size the sequential loop is already
 driver-bound, not executor-bound.
@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from backend_model_spark.ml import tuning
 from backend_model_spark.ml.train_distributed import train_distributed
-from backend_model_spark.operators.scale_utils import purge_other_apps
 
 # shared trial schedule: fewer epochs than the registered trainer —
 # tuning ranks architectures, it does not ship weights
@@ -55,13 +54,6 @@ TPE_TRIALS = 8
 TPE_EXPLORE = 4
 TPE_SEED = 20260816
 
-# (applicationId, sf_dir, h1, h2, lr_q) -> quantized final loss;
-# shared by the grid entry, the TPE entry and the compare entry so the
-# plan sweep + driver never refit a configuration twice
-_OBJ_CACHE: dict = {}
-_RESULT_CACHE: dict = {}
-
-
 def _objective(
     spark: SparkSession,
     sf_dir: str,
@@ -76,37 +68,28 @@ def _objective(
     comparisons grid-exact for both strategies and for the pinned
     oracle literals."""
     lr_q = math.floor(lr * 1e4 + 0.5) / 1e4
-    key = (spark.sparkContext.applicationId, sf_dir, h1, h2, lr_q, row_filter)
-    got = _OBJ_CACHE.get(key)
-    if got is None:
-        _, losses, _ = train_distributed(
-            spark, sf_dir, h1=h1, h2=h2, leaky=TUNE_LEAKY, lr=lr_q,
-            epochs=TUNE_EPOCHS, row_filter=row_filter,
-        )
-        got = math.floor(losses[-1] * 1e6 + 0.5) / 1e6
-        purge_other_apps(_OBJ_CACHE, key[0])
-        _OBJ_CACHE[key] = got
-    return got
+    _, losses, _ = train_distributed(
+        spark, sf_dir, h1=h1, h2=h2, leaky=TUNE_LEAKY, lr=lr_q,
+        epochs=TUNE_EPOCHS, row_filter=row_filter,
+    )
+    return math.floor(losses[-1] * 1e6 + 0.5) / 1e6
 
 
-def _search(spark: SparkSession, sf_dir: str) -> dict:
-    """Run both strategies once per (application, sf_dir); return
-    {'grid': (h1, h2, lr_q, loss_q, n_trials),
-     'tpe':  (h1, h2, lr_q, loss_q, n_trials)}."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _RESULT_CACHE.get(key)
-    if got is not None:
-        return got
-
-    # M3: exhaustive lattice, champion = min (loss, then params) —
-    # total order, no float ties left after quantization
+def _grid_search(spark: SparkSession, sf_dir: str) -> tuple:
+    """M3: exhaustive lattice, champion = min (loss, then params) —
+    total order, no float ties left after quantization. Returns
+    (h1, h2, lr_e4, loss_q, n_trials)."""
     trials = [
         ((h1, h2, TUNE_LR), _objective(spark, sf_dir, h1, h2, TUNE_LR))
         for h1, h2 in GRID
     ]
-    (g_h1, g_h2, g_lr), g_loss = min(trials, key=lambda t: (t[1], t[0]))
+    (h1, h2, lr), loss = min(trials, key=lambda t: (t[1], t[0]))
+    return h1, h2, math.floor(lr * 1e4 + 0.5), _q6(loss), len(trials)
 
-    # M4: seeded TPE over the same trainer
+
+def _tpe_search(spark: SparkSession, sf_dir: str) -> tuple:
+    """M4: seeded TPE over the same trainer. Returns
+    (h1, h2, lr_e4, loss_q, n_trials)."""
     res = tuning.tpe_search(
         lambda p: _objective(spark, sf_dir, p["h1"], p["h2"], p["lr"]),
         n_trials=TPE_TRIALS,
@@ -115,19 +98,20 @@ def _search(spark: SparkSession, sf_dir: str) -> dict:
         space=TPE_SPACE,
     )
     b = res.best_params
-    got = {
-        "grid": (g_h1, g_h2, math.floor(g_lr * 1e4 + 0.5), _q6(g_loss), len(trials)),
-        "tpe": (
-            int(b["h1"]),
-            int(b["h2"]),
-            math.floor(float(b["lr"]) * 1e4 + 0.5),
-            _q6(res.best_mae),
-            TPE_TRIALS,
-        ),
-    }
-    purge_other_apps(_RESULT_CACHE, key[0])
-    _RESULT_CACHE[key] = got
-    return got
+    return (
+        int(b["h1"]),
+        int(b["h2"]),
+        math.floor(float(b["lr"]) * 1e4 + 0.5),
+        _q6(res.best_mae),
+        TPE_TRIALS,
+    )
+
+
+def _search(spark: SparkSession, sf_dir: str) -> dict:
+    """Run both strategies; return
+    {'grid': (h1, h2, lr_e4, loss_q, n_trials),
+     'tpe':  (h1, h2, lr_e4, loss_q, n_trials)}."""
+    return {"grid": _grid_search(spark, sf_dir), "tpe": _tpe_search(spark, sf_dir)}
 
 
 def _q6(v: float) -> int:
@@ -151,7 +135,7 @@ def tuning_grid_champion(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays under pytest (ml/tuning.py:grid_search_linear); THIS face is
     the driver-checkable one because its objective is
     partitioning-independent where CV's randomSplit folds are not."""
-    return _champion_df(spark, "grid", _search(spark, sf_dir)["grid"])
+    return _champion_df(spark, "grid", _grid_search(spark, sf_dir))
 
 
 def tuning_tpe_champion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,7 +144,7 @@ def tuning_tpe_champion(spark: SparkSession, sf_dir: str) -> DataFrame:
     trial a distributed fit. tests/test_arch_search.py flips the seed
     and asserts the trial path changes (the certificate is not
     vacuous)."""
-    return _champion_df(spark, "tpe", _search(spark, sf_dir)["tpe"])
+    return _champion_df(spark, "tpe", _tpe_search(spark, sf_dir))
 
 
 # Content-addressed deterministic tuning subsample (round-11 verdict
@@ -181,12 +165,7 @@ TUNE_SUB_FILTER = (
 
 def _search_subsample(spark: SparkSession, sf_dir: str) -> tuple:
     """Grid search with subsampled trials + one full-data champion
-    refit. Returns (h1, h2, lr_e4, sub_loss_q, full_loss_q, n_trials)
-    — memoized per (application, sf_dir) beside the full searches."""
-    key = (spark.sparkContext.applicationId, sf_dir, "sub")
-    got = _RESULT_CACHE.get(key)
-    if got is not None:
-        return got
+    refit. Returns (h1, h2, lr_e4, sub_loss_q, full_loss_q, n_trials)."""
     trials = [
         (
             (h1, h2, TUNE_LR),
@@ -196,7 +175,7 @@ def _search_subsample(spark: SparkSession, sf_dir: str) -> tuple:
     ]
     (h1, h2, lr), sub_loss = min(trials, key=lambda t: (t[1], t[0]))
     full_loss = _objective(spark, sf_dir, h1, h2, lr)  # champion refit
-    got = (
+    return (
         h1,
         h2,
         math.floor(lr * 1e4 + 0.5),
@@ -204,9 +183,6 @@ def _search_subsample(spark: SparkSession, sf_dir: str) -> tuple:
         _q6(full_loss),
         len(trials),
     )
-    purge_other_apps(_RESULT_CACHE, key[0])
-    _RESULT_CACHE[key] = got
-    return got
 
 
 def tuning_subsample_champion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,8 +218,7 @@ def tuning_arch_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's two model directories: grid vs TPE champions of the
     SAME in-engine trainer, champion-challenger readout (the
     ml_mlp_model_compare rollup shape: one row per strategy plus a
-    winner flag). Reuses both searches' memoized trials — zero extra
-    fits."""
+    winner flag)."""
     r = _search(spark, sf_dir)
     best = min(("grid", "tpe"), key=lambda s: (r[s][3], s))
     rows = [

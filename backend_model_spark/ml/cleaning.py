@@ -23,7 +23,6 @@ from pyspark.ml.feature import StringIndexer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from backend_model_spark.operators.scale_utils import purge_other_apps
 
 # columns handled like the reference's cell-16 bool coercion
 BOOL_COLS = ["cleaning_fee", "instant_bookable", "host_identity_verified"]
@@ -178,40 +177,30 @@ AIRBNB_E2E_SHAPE = dict(
     n_rows=99_569, n_train=74_111, n_null_rows=99_569 - 38_499 - 3
 )
 
-# applicationId -> (train_path, test_path): the deterministic fixture
-# parquet, generated once per Spark application
-_E2E_FIXTURE_CACHE: dict = {}
-
-
 def _e2e_fixture_frames(spark):
     """(train, test) DataFrames over the deterministic 29-column dirty
-    fixture, written once per application to temp parquet and SCANNED
-    (see :func:`airbnb_e2e` for why scanning beats embedding). Shared
-    by the cleaning entry and the round-9 train/eval entry so both
+    fixture, written to temp parquet and SCANNED (see
+    :func:`airbnb_e2e` for why scanning beats embedding). Used by the
+    cleaning entry and the round-9 train/eval entry so both
     provably run the reference's exact funnel input."""
     import os
     import tempfile
 
     from backend_model_spark.ml.fixtures import generate_listings
 
-    key = spark.sparkContext.applicationId
-    paths = _E2E_FIXTURE_CACHE.get(key)
-    if paths is None:
-        train_pdf, test_pdf, _ = generate_listings(**AIRBNB_E2E_SHAPE)
-        d = tempfile.mkdtemp(prefix="airbnb_e2e_fixture_")
-        # the fixture dir would otherwise outlive the process (the
-        # cache key is the applicationId, so no later run reuses it) —
-        # repeated driver rounds on one host would accumulate ~10 MB
-        # of orphaned parquet per session (round-8 review finding)
-        import atexit
-        import shutil
+    import atexit
+    import shutil
 
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        paths = (os.path.join(d, "train.parquet"), os.path.join(d, "test.parquet"))
-        train_pdf.to_parquet(paths[0])
-        test_pdf.to_parquet(paths[1])
-        purge_other_apps(_E2E_FIXTURE_CACHE, key)
-        _E2E_FIXTURE_CACHE[key] = paths
+    train_pdf, test_pdf, _ = generate_listings(**AIRBNB_E2E_SHAPE)
+    d = tempfile.mkdtemp(prefix="airbnb_e2e_fixture_")
+    # the returned frames scan the files lazily, after this returns,
+    # so the directory lives until the process exits; without the
+    # hook a long-lived process would accumulate ~10 MB of orphaned
+    # parquet per call
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    paths = (os.path.join(d, "train.parquet"), os.path.join(d, "test.parquet"))
+    train_pdf.to_parquet(paths[0])
+    test_pdf.to_parquet(paths[1])
     return spark.read.parquet(paths[0]), spark.read.parquet(paths[1])
 
 
@@ -234,8 +223,8 @@ def airbnb_e2e(spark, sf_dir: str) -> DataFrame:
     end-to-end. All facts are integers (price summed as cents), so
     there is no float-association hazard.
 
-    The fixture is written once per application to a temp parquet and
-    SCANNED, not embedded: a 99,569-row local collection pickled into
+    The fixture is written to a temp parquet and SCANNED, not
+    embedded: a 99,569-row local collection pickled into
     every task re-pays serialization on each of the 8 downstream jobs
     (two counts, five StringIndexer fits, the final agg — measured
     22 s embedded vs ~7 s scanned), and a parquet scan is how the
@@ -294,12 +283,6 @@ SELECT
   CAST(1849519970 AS BIGINT) AS sum_zipcode,
   CAST(0 AS BIGINT) AS n_null_zip
 """
-
-
-# applicationId -> certificate tuple: the fit is deterministic, so one
-# train per application (the registry plan sweep constructs this entry
-# repeatedly; cf. ml_queries._GBT_CACHE)
-_TRAIN_EVAL_CACHE: dict = {}
 
 
 def content_bucket():
@@ -364,29 +347,24 @@ def airbnb_train_eval(spark, sf_dir: str) -> DataFrame:
 
     from backend_model_spark.ml.pipeline import train_and_evaluate
 
-    key = spark.sparkContext.applicationId
-    row = _TRAIN_EVAL_CACHE.get(key)
-    if row is None:
-        train_raw, test_raw = _e2e_fixture_frames(spark)
-        cleaned = clean_listings(train_raw, test_raw)
-        bucket = content_bucket()
-        train = cleaned.filter(bucket < 80)
-        test = cleaned.filter(bucket >= 80)
-        res = train_and_evaluate(train, test, model="gbt", maxDepth=4, maxIter=10)
-        evaluator = RegressionEvaluator(labelCol="price", predictionCol="prediction")
-        r2_train = evaluator.setMetricName("r2").evaluate(res.model.transform(train))
-        n_train, n_test = train.count(), test.count()
-        row = (
-            n_train + n_test,
-            bool(abs(n_train / (n_train + n_test) - 0.8) <= 0.05),
-            bool(math.isfinite(res.mae) and math.isfinite(res.rmse)),
-            bool(res.mae <= res.rmse + 1e-9),
-            bool(res.r2 <= 1.0 + 1e-9),
-            bool(r2_train > 0.0),
-            bool(res.r2 > 0.0),
-        )
-        purge_other_apps(_TRAIN_EVAL_CACHE, key)
-        _TRAIN_EVAL_CACHE[key] = row
+    train_raw, test_raw = _e2e_fixture_frames(spark)
+    cleaned = clean_listings(train_raw, test_raw)
+    bucket = content_bucket()
+    train = cleaned.filter(bucket < 80)
+    test = cleaned.filter(bucket >= 80)
+    res = train_and_evaluate(train, test, model="gbt", maxDepth=4, maxIter=10)
+    evaluator = RegressionEvaluator(labelCol="price", predictionCol="prediction")
+    r2_train = evaluator.setMetricName("r2").evaluate(res.model.transform(train))
+    n_train, n_test = train.count(), test.count()
+    row = (
+        n_train + n_test,
+        bool(abs(n_train / (n_train + n_test) - 0.8) <= 0.05),
+        bool(math.isfinite(res.mae) and math.isfinite(res.rmse)),
+        bool(res.mae <= res.rmse + 1e-9),
+        bool(res.r2 <= 1.0 + 1e-9),
+        bool(r2_train > 0.0),
+        bool(res.r2 > 0.0),
+    )
     return spark.createDataFrame(
         [row],
         "n_total bigint, split_frac_ok boolean, metrics_finite boolean, "

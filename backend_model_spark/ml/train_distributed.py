@@ -14,7 +14,7 @@ driver applies the update to a tiny weight vector and broadcasts it
 into the next epoch.  The driver never sees rows — only the ~P+2
 sufficient statistics per epoch.
 
-Plan shape per epoch: persisted integer feature frame -> mapInPandas
+Plan shape per epoch: pinned integer feature frame -> mapInPandas
 (numpy forward+backward per Arrow batch, per-row gradient contributions
 QUANTIZED then summed per batch) -> posexplode -> groupBy(pos).sum —
 one tiny shuffle of #batches × (P+2) doubles -> P+2 scalars to the
@@ -62,10 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_model_spark.sources.tables import load_table
-from backend_model_spark.operators.scale_utils import (
-    ensure_persisted,
-    purge_other_apps,
-)
+from backend_model_spark.operators.scale_utils import _pin
 
 WG = float(1 << 16)   # weight grid (16 fractional bits); exact int->float
 CLIP = float(1 << 10)  # per-row contribution clip (rarely active; bounds sums)
@@ -289,40 +286,24 @@ def _exact_moments(feats: DataFrame) -> dict:
     return out
 
 
-# (applicationId, sf_dir) -> (persisted feature frame, exact moments):
-# one ~MB-scale cached frame per corpus per application, shared by the
-# registered trainer and every architecture-search trial (the memo owns
-# the persist — cf. mllib_ops._BRP_PARTS_CACHE)
-_FEATS_CACHE: dict = {}
-
-
 def _feats_and_moments(
     spark: SparkSession, sf_dir: str, row_filter: str | None = None
 ):
-    key = (spark.sparkContext.applicationId, sf_dir, row_filter)
-    got = _FEATS_CACHE.get(key)
-    if got is None:
-        # balance the cached partitions ONCE before the many epoch
-        # scans: a single skewed input split (measured at sf1 — one
-        # 28-task stage ran 27 fast + 1 long straggler EVERY epoch)
-        # otherwise serializes each epoch on one python worker. One
-        # narrow shuffle at persist time; the trajectory is
-        # partition-independent by construction, so this is purely a
-        # wall-clock fix.
-        feats = (
-            _feature_frame(spark, sf_dir, row_filter)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .persist()
+    """(pinned feature frame, exact moments) for one fit: every epoch
+    scans the pinned frame."""
+    # balance the pinned partitions ONCE before the many epoch
+    # scans: a single skewed input split (measured at sf1 — one
+    # 28-task stage ran 27 fast + 1 long straggler EVERY epoch)
+    # otherwise serializes each epoch on one python worker. One
+    # narrow shuffle at pin time; the trajectory is
+    # partition-independent by construction, so this is purely a
+    # wall-clock fix.
+    feats = _pin(
+        _feature_frame(spark, sf_dir, row_filter).repartition(
+            spark.sparkContext.defaultParallelism
         )
-        got = (feats, _exact_moments(feats))
-        purge_other_apps(_FEATS_CACHE, key[0])
-        _FEATS_CACHE[key] = got
-    else:
-        # an external clearCache() unpersists the memo-owned frame
-        # behind the memo's back; re-assert it or every epoch re-scans
-        # the parquet (the mllib_ops._BRP_PARTS_CACHE canary lesson)
-        ensure_persisted(got[0])
-    return got
+    )
+    return feats, _exact_moments(feats)
 
 
 def train_distributed(
@@ -487,22 +468,10 @@ def weight_checksum(wts: list[np.ndarray]) -> int:
 # Registered entry
 # ---------------------------------------------------------------------------
 
-# applicationId+sf_dir -> (wts, losses, moments): ONE fit per
-# application, shared by the training certificate and the
-# train-then-serve composition (the fit is deterministic; the registry
-# plan sweep constructs entries repeatedly — cf. ml_queries._GBT_CACHE)
-_FIT_CACHE: dict = {}
-
-
-def _fit_cached(spark: SparkSession, sf_dir: str, opt: str = "gd"):
-    key = (spark.sparkContext.applicationId, sf_dir, opt)
-    got = _FIT_CACHE.get(key)
-    if got is None:
-        lr = ADAM_LR if opt == "adam" else TRAIN_LR
-        got = train_distributed(spark, sf_dir, lr=lr, opt=opt)
-        purge_other_apps(_FIT_CACHE, key[0])
-        _FIT_CACHE[key] = got
-    return got
+def _fit(spark: SparkSession, sf_dir: str, opt: str = "gd"):
+    """The registered schedule's fit with update rule ``opt``."""
+    lr = ADAM_LR if opt == "adam" else TRAIN_LR
+    return train_distributed(spark, sf_dir, lr=lr, opt=opt)
 
 
 def mlp_train_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,14 +502,14 @@ def mlp_train_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
       additionally holds the full weight arrays bit-equal to the
       serial numpy twin.
 
-    Scale: per epoch ONE narrow scan (persisted frame) + a shuffle of
+    Scale: per epoch ONE narrow scan (pinned frame) + a shuffle of
     #batches × (P+2) doubles reduced to P+2 scalars — reduction width
     is the parameter count, never the row count; weights broadcast
     per epoch (~KB). The exactness budget (n·2^10·qg < 2^52) is
     auto-adapted to n by :func:`_qg_bits`, so the order-independence
     guarantee survives any corpus size.
     """
-    wts, losses, m = _fit_cached(spark, sf_dir)
+    wts, losses, m = _fit(spark, sf_dir)
     mono = all(losses[i + 1] < losses[i] for i in range(len(losses) - 1))
     row = (
         int(m["n"]),
@@ -584,10 +553,10 @@ FROM lineitem
 
 def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full model LIFECYCLE in one engine job: the
-    in-engine-trained weights (:func:`train_distributed`, one cached
-    fit per application) deployed through the serving shape of
-    ml/mlp.py — broadcast weights + one zero-shuffle mapInPandas
-    scoring pass — and evaluated with exact integer error sums.
+    in-engine-trained weights (:func:`train_distributed`) deployed
+    through the serving shape of ml/mlp.py — broadcast weights + one
+    zero-shuffle mapInPandas scoring pass — and evaluated with exact
+    integer error sums.
 
     Per row: the deterministic forward pass (same no-BLAS
     :func:`_matmul_det` math as training) on standardized features,
@@ -601,11 +570,11 @@ def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     model registry would enforce before promotion.
 
     Scale: one narrow scan + mapInPandas + a map-side-combinable
-    1-row aggregate; the fit itself is the cached trainer (see
+    1-row aggregate; the fit itself is the registered trainer (see
     :func:`mlp_train_distributed`)."""
     import pandas as pd
 
-    wts, losses, m = _fit_cached(spark, sf_dir)
+    wts, losses, m = _fit(spark, sf_dir)
     mus = [m[c][0] for c in FEATURES]
     sds = [m[c][1] for c in FEATURES]
     ym, ys = m["y"]
@@ -631,7 +600,7 @@ def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    scored = _feats_and_moments(spark, sf_dir)[0].mapInPandas(
+    scored = _feature_frame(spark, sf_dir).mapInPandas(
         score, "pred_cents long, actual_cents long"
     )
     d = (F.col("pred_cents") - F.col("actual_cents")).cast("decimal(38,0)")
@@ -695,14 +664,15 @@ def mlp_train_adam(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotonicity (adaptive steps legitimately overshoot early — the
     measured trajectories are non-monotone at every stable lr), and
     ``adam_beats_gd`` pins the head-to-head at equal epoch budget
-    against the cached GD fit (measured 0.029 vs 0.071 normalized MSE
-    at sf0.01 — the reason the reference chose Adam). Final loss and
-    quantized-weight checksum pinned at both checked scales.
+    against the GD fit of the same schedule (measured 0.029 vs 0.071
+    normalized MSE at sf0.01 — the reason the reference chose Adam).
+    Final loss and quantized-weight checksum pinned at both checked
+    scales.
 
     Scale: identical plan to the GD trainer — the optimizer is pure
     driver arithmetic on P scalars."""
-    wts, losses, m = _fit_cached(spark, sf_dir, opt="adam")
-    _, losses_gd, _ = _fit_cached(spark, sf_dir)
+    wts, losses, m = _fit(spark, sf_dir, opt="adam")
+    _, losses_gd, _ = _fit(spark, sf_dir)
     row = (
         int(m["n"]),
         TRAIN_EPOCHS,
@@ -767,27 +737,13 @@ def _bucket_col(num_batches: int = MB_NUM_BATCHES):
     ).alias("b")
 
 
-# (applicationId, sf_dir) -> persisted feature frame WITH the batch
-# column. Moments are NOT recomputed — shared with _FEATS_CACHE. At
-# cluster scale this frame would be written clustered by b (sort or
-# partition on the batch id) so each batch job's filter prunes to
-# 1/NB of the files; locally the in-memory columnar scan's batch
-# stats do the skipping.
-_MB_FEATS_CACHE: dict = {}
-
-
 def _mb_feats(spark: SparkSession, sf_dir: str, num_batches: int = MB_NUM_BATCHES):
-    key = (spark.sparkContext.applicationId, sf_dir, num_batches)
-    got = _MB_FEATS_CACHE.get(key)
-    if got is None:
-        base, m = _feats_and_moments(spark, sf_dir)
-        fr = base.select(*FEATURES, "y", _bucket_col(num_batches)).persist()
-        got = (fr, m)
-        purge_other_apps(_MB_FEATS_CACHE, key[0])
-        _MB_FEATS_CACHE[key] = got
-    else:
-        ensure_persisted(got[0])
-    return got
+    """(pinned feature frame WITH the batch column, exact moments). At
+    cluster scale this frame would be written clustered by b (sort or
+    partition on the batch id) so each batch job's filter prunes to
+    1/NB of the files."""
+    base, m = _feats_and_moments(spark, sf_dir)
+    return _pin(base.select(*FEATURES, "y", _bucket_col(num_batches))), m
 
 
 def _reduce_sums(
@@ -861,7 +817,7 @@ def train_distributed_minibatch(
     Σ batch loss sums / n — every row scored exactly once per epoch,
     each at the weights current when its batch ran], final FULL-batch
     loss from one trailing evaluation pass, moments). Scan budget:
-    epochs + 1 full passes over the persisted frame (NB filtered jobs
+    epochs + 1 full passes over the pinned frame (NB filtered jobs
     per epoch touch disjoint row subsets) + the init evaluation —
     identical I/O to full GD at the same epoch count, with NB× the
     updates."""
@@ -959,19 +915,6 @@ def train_serial_minibatch(
     return wts, losses, final_loss
 
 
-_MB_FIT_CACHE: dict = {}
-
-
-def _mb_fit_cached(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _MB_FIT_CACHE.get(key)
-    if got is None:
-        got = train_distributed_minibatch(spark, sf_dir)
-        purge_other_apps(_MB_FIT_CACHE, key[0])
-        _MB_FIT_CACHE[key] = got
-    return got
-
-
 def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REGISTERED face of :func:`train_distributed_minibatch`.
 
@@ -984,7 +927,7 @@ def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
       The minibatch fit costs epochs+1 full reduction passes over the
       corpus (each epoch's batch jobs sweep disjoint subsets = one
       pass; streamed losses are free; + 1 trailing full evaluation);
-      the cached GD trajectory provides ``losses_gd[epochs+1]``,
+      the GD trajectory provides ``losses_gd[epochs+1]``,
       which cost GD epochs+2 reduction passes — ONE MORE than
       minibatch (both also share the one moments pass), so the
       certificate is conservative: minibatch must converge further on
@@ -994,8 +937,8 @@ def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
       any partitioning (parity with the serial twin is separately
       held bit-equal by tests/test_train_distributed.py).
     """
-    wts, losses, final_loss, m = _mb_fit_cached(spark, sf_dir)
-    _, losses_gd, _ = _fit_cached(spark, sf_dir)
+    wts, losses, final_loss, m = train_distributed_minibatch(spark, sf_dir)
+    _, losses_gd, _ = _fit(spark, sf_dir)
     row = (
         int(m["n"]),
         MB_EPOCHS,

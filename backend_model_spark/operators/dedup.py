@@ -21,8 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
+from backend_model_spark.operators.scale_utils import _pin
 from backend_model_spark.sources.tables import load_table, spread
 
 TOKENS = "split(trim(text), '\\\\s+')"
@@ -182,48 +181,7 @@ cand AS (
 )
 
 
-# session-scoped materialization of the digest-group frame — the
-# shared first stage of the round-8 star contract, consumed by
-# candidates, ngram, containment, verified (2-3 branches EACH: reps +
-# star). Same design as _PAIR_CACHE below; MEMORY_AND_DISK because
-# the frame carries text.
-_REPS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _evict_oldest(cache: dict, cap: int = 8) -> None:
-    """Bound the session caches: the test suite runs hundreds of
-    fixture sf_dirs through these entries, and every key pins a
-    persisted frame (the members frame carries TEXT). Eviction is
-    true LRU — every hit calls :func:`_touch` to move its key to the
-    dict's end, so the front is always the least-recently-used."""
-    while len(cache) > cap:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
-
-
-def _touch(cache: dict, key) -> None:
-    """Move ``key`` to the end of ``cache`` (mark most-recently-used).
-    Plain reassignment keeps a dict key's ORIGINAL position, so
-    without this a hot sf_dir inserted first would be evicted first."""
-    if key in cache:
-        cache[key] = cache.pop(key)
-
-
-def _still_cached(df: DataFrame) -> bool:
-    """True while a persisted frame is still registered with the cache
-    manager — `spark.catalog.clearCache()` unpersists data behind the
-    session caches' backs, and a stale dict hit would make EVERY
-    downstream job recompute the full LSH lineage (measured: the
-    multi-job graph entries pay 2-5 recomputes, triangles 10 s at
-    sf0.1 instead of ~3)."""
-    sl = df.storageLevel
-    return bool(sl.useMemory or sl.useDisk)
-
-
-def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
+def _content_reps(spark: SparkSession, sf_dir: str):
     """(reps, star) — exact-dedup-first over shingle-eligible docs.
 
     ``reps`` is one (doc_id, text) representative (min doc_id) per
@@ -236,53 +194,26 @@ def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
     sees each distinct text once, so duplicate-group cost is linear,
     never C(g,2). SQL twin: :data:`DEDUP_FIRST_CTES`.
 
-    ``eager=False`` (round 12, guide §1.2): a caller whose NEXT
-    materialization's lineage itself scans every partition of
-    ``members`` (the banded build in :func:`lsh_candidate_pairs`)
-    may skip the dedicated count() action here — that action's only
-    job is to pre-build the cache blocks, and the caller's own first
-    action builds them identically through the InMemoryRelation. The
-    persist is registered either way; only WHO pays the build moves.
+    The digest-group frame feeds both branches (and a join's two map
+    sides), so it is pinned: one materialization per call.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    members = _REPS_CACHE.get(key)
-    _touch(_REPS_CACHE, key)
-    if members is not None and not _still_cached(members):
-        # an external clearCache() (bench quiesce, memory pressure)
-        # unpersisted the data while the dict kept the frame — every
-        # consumer job would silently recompute the whole lineage.
-        # Re-register so the next action materializes once again.
-        members = members.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            members.count()  # eager: see the build-path note below
-        _REPS_CACHE[key] = members
-    if members is None:
-        docs = load_table(spark, "documents", sf_dir)
-        # compute-width exchange pin (round 11, guide §2.2): the
-        # digest-window stage FUSES with the downstream shingle
-        # explode + md5 signature map side in the revalidation
-        # lineage; its shuffle is ~1 MB of compressed text but the
-        # stage is compute-bound, and AQE's byte-based coalescing
-        # squashed it onto 3 tasks (measured 0.68 s of a 2.5 s run).
-        # Pinning at the conf'd shuffle width keeps it at full
-        # parallelism; the window reuses the pinned exchange (same
-        # key), so no extra shuffle is added.
-        sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        members = (
-            docs.filter(F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 3)
-            .select("doc_id", "text", F.md5("text").alias("h"))
-            .repartition(sp, "h")
-            .withColumn("rep_id", F.min("doc_id").over(Window.partitionBy("h")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # eager materialization (round 11): the reps/star consumers —
-        # and a join's two map sides — run as CONCURRENT jobs; a lazy
-        # persist lets each re-run the digest window from parquet.
-        # One count() builds the blocks once, everyone else reads them.
-        if eager:
-            members.count()
-        _REPS_CACHE[key] = members
-        _evict_oldest(_REPS_CACHE)
+    docs = load_table(spark, "documents", sf_dir)
+    # compute-width exchange pin (round 11): the
+    # digest-window stage FUSES with the downstream shingle
+    # explode + md5 signature map side in the revalidation
+    # lineage; its shuffle is ~1 MB of compressed text but the
+    # stage is compute-bound, and AQE's byte-based coalescing
+    # squashed it onto 3 tasks (measured 0.68 s of a 2.5 s run).
+    # Pinning at the conf'd shuffle width keeps it at full
+    # parallelism; the window reuses the pinned exchange (same
+    # key), so no extra shuffle is added.
+    sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    members = _pin(
+        docs.filter(F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 3)
+        .select("doc_id", "text", F.md5("text").alias("h"))
+        .repartition(sp, "h")
+        .withColumn("rep_id", F.min("doc_id").over(Window.partitionBy("h")))
+    )
     reps = members.filter(F.col("doc_id") == F.col("rep_id")).select(
         "doc_id", "text"
     )
@@ -292,53 +223,19 @@ def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
     return reps, star
 
 
-# distinct (rep doc_id, shingle) inverted index — the star contract's
-# SECOND shared stage, consumed by candidates (signatures), ngram,
-# containment, and verified. Before round 8's review pass each of the
-# three Jaccard-family entries rebuilt and separately persisted an
-# identical copy.
-_REP_SHINGLED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# (vec_id, label, v, rep_id) digest-group frame for the embedding
-# pairwise family — same bounded-LRU posture as the text-side caches
-_EMB_MEMBERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingle_index(reps: DataFrame) -> DataFrame:
-    """The star contract's distinct (doc_id, shingle) inverted index
-    over representatives — ONE construction shared by the memoized
-    :func:`_rep_shingled` and the memo-miss inline path of
-    :func:`lsh_candidate_pairs` (round-12 advice: two hand-copied
-    versions risked drifting). DISTINCT is per-doc set semantics and
-    doc_id is unique per rep, so per-row ``array_distinct`` before
-    the explode is set-identical to a global DISTINCT with zero
-    shuffle (guide §2.1; round 11)."""
+    """DISTINCT (doc_id, shingle) inverted index over the
+    representatives — the star contract's second shared stage,
+    consumed by candidates (signatures), ngram, containment and
+    verified. Safe for the signature path too: MIN over the distinct
+    shingle set equals MIN over the raw explode. DISTINCT is per-doc
+    set semantics and doc_id is unique per rep, so per-row
+    ``array_distinct`` before the explode is set-identical to a
+    global DISTINCT with zero shuffle (round 11)."""
     return reps.withColumn("toks", F.expr(TOKENS)).select(
         "doc_id",
         F.explode(F.array_distinct(F.expr(SHINGLES))).alias("shingle"),
     )
-
-
-def _rep_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT (doc_id, shingle) over the representatives — cached
-    per (application, sf_dir) with the same LRU + clearCache
-    revalidation as the other session materializations. Safe for the
-    signature path too: MIN over the distinct shingle set equals MIN
-    over the raw explode."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _REP_SHINGLED_CACHE.get(key)
-    _touch(_REP_SHINGLED_CACHE, key)
-    if sh is not None and not _still_cached(sh):
-        sh = sh.persist()
-        sh.count()  # eager: concurrent consumers (see _content_reps)
-        _REP_SHINGLED_CACHE[key] = sh
-    if sh is None:
-        reps, _ = _content_reps(spark, sf_dir)
-        sh = _shingle_index(reps).persist()
-        sh.count()  # eager: concurrent consumers (see _content_reps)
-        _REP_SHINGLED_CACHE[key] = sh
-        _evict_oldest(_REP_SHINGLED_CACHE)
-    return sh
 
 
 def tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -413,9 +310,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair list is quadratic in duplicate-group size (a 4001-copy
     boilerplate group alone is 8M rows); the star form is linear and
     expansion-recoverable."""
-    _, star = _content_reps(spark, sf_dir)
-    shingled = _rep_shingled(spark, sf_dir)
-    # persisted: read three times below (sizes + both join sides)
+    reps, star = _content_reps(spark, sf_dir)
+    # pinned: read three times below (sizes + both join sides)
+    shingled = _pin(_shingle_index(reps))
     sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = shingled.alias("a")
     b = shingled.alias("b")
@@ -490,8 +387,8 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see :data:`DEDUP_FIRST_CTES`) — identical docs are one
     rep→member star row at containment 1.0/1.0, never C(g,2) rows.
     """
-    _, star = _content_reps(spark, sf_dir)
-    shingled = _rep_shingled(spark, sf_dir)
+    reps, star = _content_reps(spark, sf_dir)
+    shingled = _pin(_shingle_index(reps))
     sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = shingled.alias("a")
     b = shingled.alias("b")
@@ -598,25 +495,12 @@ ORDER BY doc_id
 """
 
 
-# Candidate pairs are the shared first stage of the whole near-dup
-# family (ordered presentation, connected components, PageRank, the
-# verify stage). Each is registered as its own query, so without
-# reuse every one re-runs the shingle→md5→band→self-join pipeline —
-# the most expensive lineage in the module. A session-scoped
-# materialized view (persisted DataFrame keyed by application + data
-# dir) makes the stage compute-once, exactly like a production
-# pipeline that materializes candidates before fanning out. The
-# table is pair-sized (orders of magnitude smaller than the corpus);
-# MEMORY_AND_DISK so an unexpectedly dense graph spills instead of
-# evicting. Entries die with their Spark application.
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band-join: band the 8-value signature into 4 bands of 2,
     bucket-join on (band, values) — candidate pairs via equi-join,
-    unordered. Materialized once per (session, sf_dir) — see
-    ``_PAIR_CACHE``.
+    unordered. The shared first stage of the whole near-dup family
+    (ordered presentation, connected components, PageRank, the verify
+    stage); each entry computes it from its own inputs.
 
     EXACT-DEDUP-FIRST STAR CONTRACT (round 8 — see the block comment
     at :data:`DEDUP_FIRST_CTES`): the band self-join runs on one
@@ -635,38 +519,16 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation is one digest shuffle + a shuffle on band keys, never
     all-pairs and never quadratic in duplication.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    _touch(_PAIR_CACHE, key)
-    if cached is not None:
-        if not _still_cached(cached):
-            # see _content_reps: survive an external clearCache()
-            cached = cached.persist(StorageLevel.MEMORY_AND_DISK)
-            cached.count()
-            _PAIR_CACHE[key] = cached
-        return cached
-    # eager=False (round 12): the first downstream action here is
-    # _rep_shingled's sh.count(), whose lineage scans every members
-    # partition through the persisted InMemoryRelation (reps =
-    # members.filter) — the cache blocks are built by THAT action and
-    # the dedicated members.count() job was pure overhead on the cold
-    # path (one whole action + its driver planning gap). Later
-    # consumers (the star branch of pairs, other family entries)
-    # read built blocks.
-    reps, star = _content_reps(spark, sf_dir, eager=False)
-    # shared distinct index (MIN over the distinct set == MIN over the
-    # raw explode, so the signature path reuses it too).
-    # Round 12 (verdict ask #1): the round-11 "skip the _rep_shingled
-    # materialization when candidates is the only consumer" change
-    # (009c997) was adjudicated with a quiet-host back-to-back A/B on
-    # this tree: skip ON  minhash 1.30 s / clusters 1.48 s, skip OFF
-    # 1.15 s / 1.37 s (min-of-4, canaries 280-370 ms) — the driver's
-    # r11 regression direction reproduces, so the skip is REVERTED.
-    # Two cheap actions (shingle-index build + banded build reading
-    # cached shingles) beat one fused action that re-tokenizes the
-    # corpus inside the banded lineage, and the memoized index is
-    # then free for every other family entry in the same session.
-    rep_shingled = _rep_shingled(spark, sf_dir)
+    reps, star = _content_reps(spark, sf_dir)
+    return _candidate_pairs(_shingle_index(reps), star)
+
+
+def _candidate_pairs(rep_shingled: DataFrame, star: DataFrame) -> DataFrame:
+    """Rep-level band-join candidates ∪ star edges, pinned: the
+    family's consumers read the pair list more than once (a count
+    plus the graph build in connected components, both edge
+    directions in PageRank). ``rep_shingled`` is the
+    :func:`_shingle_index` of the representatives."""
     sigs = _mh_digest(rep_shingled).groupBy("doc_id").agg(
         *[
             F.min(F.expr(_mh_expr_from_digest(i))).alias(f"mh_{i}")
@@ -684,13 +546,10 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = sigs.select(
         "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("bb")
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # persist: the self-join reads this lineage twice, and the banded
+    # pinned: the self-join reads this lineage twice, and the banded
     # table (4 rows/doc, two small columns) is far cheaper to hold
     # than to recompute through the md5 pipeline
-    banded = banded.persist()
-    # eager: the self-join's two map sides launch concurrently and a
-    # cold lazy cache would run the shingle→md5→min lineage twice
-    banded.count()
+    banded = _pin(banded)
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -707,13 +566,8 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # star edges can't collide with rep-level pairs (members are
         # never reps), so unionAll after the distinct — no re-shuffle
         .unionAll(star)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    pairs.count()  # materialize now so the banded intermediate can go
-    banded.unpersist()
-    _PAIR_CACHE[key] = pairs
-    _evict_oldest(_PAIR_CACHE)
-    return pairs
+    return _pin(pairs)
 
 
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -880,26 +734,14 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
     )
-    # persisted via the bounded session cache: three consumers (both
-    # grid-join sides + the star branch) would each recompute the
-    # array-keyed window shuffle (measured A/B in SCALE.md round 8),
-    # and embedding_duplicate_clusters re-enters this function in the
-    # same session — an unbounded per-call persist() would pin one
-    # corpus-sized frame per invocation (review finding, round 8)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    members = _EMB_MEMBERS_CACHE.get(key)
-    _touch(_EMB_MEMBERS_CACHE, key)
-    if members is not None and not _still_cached(members):
-        members = members.persist(StorageLevel.MEMORY_AND_DISK)
-        members.count()  # eager: concurrent consumers (see _content_reps)
-        _EMB_MEMBERS_CACHE[key] = members
-    if members is None:
-        members = allv.withColumn(
+    # pinned: three consumers (both grid-join sides + the star
+    # branch) would each recompute the array-keyed window shuffle
+    # (measured A/B in SCALE.md round 8)
+    members = _pin(
+        allv.withColumn(
             "rep_id", F.min("vec_id").over(Window.partitionBy("label", "v"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        members.count()  # eager: concurrent consumers (see _content_reps)
-        _EMB_MEMBERS_CACHE[key] = members
-        _evict_oldest(_EMB_MEMBERS_CACHE)
+        )
+    )
     v = members.filter(F.col("vec_id") == F.col("rep_id")).select(
         "vec_id", "label", "v"
     )
@@ -1112,8 +954,8 @@ def duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the interesting output is the duplicate groups, not a
     copy of the corpus.
     """
-    # already materialized by the shared candidate stage — no persist
-    # of our own, and counting it is a cache read
+    # the candidate stage returns a pinned frame: counting it and
+    # building the graph read one materialization
     raw_edges = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return _cluster_report(_connected_components(spark, raw_edges))
 
@@ -1237,7 +1079,7 @@ def _connected_components(spark: SparkSession, raw_edges: DataFrame) -> DataFram
         raise RuntimeError(
             f"connected components did not converge in {MAX_CC_ITERATIONS} rounds"
         )
-    und.unpersist()  # edges itself is the shared stage — stays cached
+    und.unpersist()
     return labels
 
 
@@ -1332,12 +1174,13 @@ def lsh_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`duplicate_clusters`.
     """
     edges = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    und = (
+    # pinned: every iteration reads it, and the caller materializes
+    # the result after we return
+    und = _pin(
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(
             edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .persist()
     )
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     und_deg = und.join(deg, "src")
@@ -1365,11 +1208,6 @@ def lsh_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("pr_micro").desc(), F.col("doc_id").asc())
     )
-    # und stays persisted: the returned lineage references it once per
-    # iteration, and the caller materializes after we return — an
-    # eager unpersist here would recompute the whole LSH candidate
-    # generation per reference. The table is edge-sized (KBs); session
-    # cleanup / bench clearCache reclaims it.
     return out
 
 
@@ -1430,12 +1268,10 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     already proven. Zipf 10× stress: 267 s → 2.4×; full-replica 10×
     5.1× → measured after this change in SCALE.md.
     """
-    # build the shingle-index memo FIRST: the candidate build then
-    # reuses it (it checks the memo), instead of inlining its own
-    # shingle pass and leaving this function to build the memo anyway
-    shingled = _rep_shingled(spark, sf_dir)
-    cand = lsh_candidate_pairs(spark, sf_dir)
-    _, star = _content_reps(spark, sf_dir)
+    reps, star = _content_reps(spark, sf_dir)
+    # pinned: the candidate build and the verify stage both read it
+    shingled = _pin(_shingle_index(reps))
+    cand = _candidate_pairs(shingled, star)
     sizes = shingled.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles")
     )
@@ -1463,8 +1299,6 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_a", "doc_b")
     )
-    # shingled stays persisted until the caller materializes
-    # (see lsh_graph_pagerank note); bench/driver reclaim via session
     return out
 
 
@@ -1563,7 +1397,7 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention (kept/dropped counts + dedup ratio), i.e. the yield
     table a data-curation run publishes.
 
-    Scale: reuses the shared candidate stage (cached per sf_dir) and
+    Scale: the shared candidate stage (:func:`lsh_candidate_pairs`) and
     the cost-based CC (:func:`_connected_components`); the final pass
     is one broadcast-size join of the drop set (cluster non-minima —
     bounded by duplicate count, ≪ corpus) onto the corpus scan.

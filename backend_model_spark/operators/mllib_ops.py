@@ -31,10 +31,7 @@ from pyspark.sql import functions as F
 
 from backend_model_spark.operators.dedup import SHINGLES, tokenized_docs
 from backend_model_spark.sources.tables import load_table
-from backend_model_spark.operators.scale_utils import (
-    ensure_persisted,
-    purge_other_apps,
-)
+from backend_model_spark.operators.scale_utils import _pin
 
 SEED = 42
 # Round-9 bounded-output contract (round-8 verdict ask #3): the LSH
@@ -338,19 +335,10 @@ def mllib_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_a", "doc_b")
 
 
-# (applicationId, sf_dir) -> parts tuple: bounds the persisted ``reps``
-# frame to ONE per corpus per application instead of one per invocation
-# (round-9 advice: the plain face used to leak ~15 MB of cache per
-# call). The memo owns the persist; no face unpersists ``reps``.
-_BRP_PARTS_CACHE: dict = {}
-
-
 def _brp_parts(spark: SparkSession, sf_dir: str):
     """(vecs, reps, cand, kept, star) — the ONE BRP pipeline
     (bucketLength 0.3 since round 9, 4 tables, Euclidean < 1.15
-    self-join) shared by the plain and certified faces, memoized per
-    (application, sf_dir); ``reps`` may be persisted and is OWNED BY
-    THE MEMO (callers must not unpersist it). ``cand`` is the uncapped
+    self-join) shared by the plain and certified faces. ``cand`` is the uncapped
     rep-level candidate list (certificate-only); ``kept`` its
     per-anchor top-``K_CAP`` prefix (the emitted contract); ``star``
     the rep→member duplicate edges.
@@ -369,21 +357,6 @@ def _brp_parts(spark: SparkSession, sf_dir: str):
     asc, id asc) candidates per anchor. The Zipf 10× corpus has
     564,239 true pairs at threshold 1.15: an output-bound cost no
     plan can fix while the contract is "emit every pair"."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BRP_PARTS_CACHE.get(key)
-    if hit is not None:
-        got, owns_persist = hit
-        if owns_persist:
-            # an external clearCache() (e.g. the bench protocol's
-            # quiesce) unpersists the memo-owned reps frame behind our
-            # back; without re-asserting the persist, every downstream
-            # evaluation re-pays the dedup window per lineage walk —
-            # measured 239 s vs 35 s at Zipf when the round-10 canary
-            # re-check caught exactly this. Only the DUPLICATED branch
-            # owns a persist: on duplicate-free corpora reps aliases
-            # the raw vecs frame and must never be pinned.
-            ensure_persisted(got[1])
-        return got
     emb = load_table(spark, "embeddings", sf_dir)
     vecs = emb.select(
         "vec_id",
@@ -428,21 +401,19 @@ def _brp_parts(spark: SparkSession, sf_dir: str):
         members = vecs.withColumn(
             "rep_id", F.min("vec_id").over(Window.partitionBy("arr"))
         ).select("vec_id", "rep_id")
-        # reps IS persisted (round 9, reversing the round-7 counter-
+        # reps IS pinned (round 9, reversing the round-7 counter-
         # measurement for THIS frame): approxSimilarityJoin evaluates
         # its input lineage several times (fit's first(), both
-        # exploded sides), and at Zipf 10× the unpersisted rep join
+        # exploded sides), and at Zipf 10× the unmaterialized rep join
         # re-pays the array-shuffling dedup window each time —
         # measured 62-96 s vs 12.6 s persisted (6-run alternating A/B,
-        # SCALE.md round 9). Ownership (round-9 advice): the persist
-        # belongs to the _BRP_PARTS_CACHE memo — ONE ~15 MB frame per
-        # (application, sf_dir), reused by every face and never
-        # unpersisted by callers (test sessions clearCache between
-        # timed runs).
-        reps = vecs.join(
-            members.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id"),
-            "vec_id",
-        ).persist()
+        # SCALE.md round 9).
+        reps = _pin(
+            vecs.join(
+                members.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id"),
+                "vec_id",
+            )
+        )
         cand = _rep_join(reps)
         star = (
             members.filter(F.col("vec_id") != F.col("rep_id"))
@@ -453,13 +424,7 @@ def _brp_parts(spark: SparkSession, sf_dir: str):
             )
         )
     kept = _kcap(cand, "vec_a", "euclidean_dist", "vec_b")
-    got = (vecs, reps, cand, kept, star)
-    # owns_persist: True only on the duplicated branch (reps is the
-    # deduped frame this function persisted); on the duplicate-free
-    # short-circuit reps IS vecs, unpersisted by design
-    purge_other_apps(_BRP_PARTS_CACHE, key[0])
-    _BRP_PARTS_CACHE[key] = (got, reps is not vecs)
-    return got
+    return vecs, reps, cand, kept, star
 
 
 def _brp_pairs(spark: SparkSession, sf_dir: str):
@@ -923,7 +888,6 @@ def mllib_brp_ann_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_dev = _euclid_dev(pairs, vecs)
     kcap_ok = _kcap_topk_ok(cand, kept, "vec_a", "euclidean_dist", "vec_b")
     recall = _brp_sample_recall(reps, kept)
-    # reps is NOT unpersisted: the _BRP_PARTS_CACHE memo owns it
     for df in (vecs, cand, kept, pairs):
         df.unpersist()
     return spark.createDataFrame(

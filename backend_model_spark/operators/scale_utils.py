@@ -39,7 +39,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 __all__ = ["with_global_rank", "with_global_ntile", "broadcast_scalars"]
 
@@ -55,26 +54,17 @@ def _pin(df: DataFrame) -> DataFrame:
     driver-collected per-partition offsets would be applied to a
     differently-bounded execution and the ranks/prefix sums would be
     corrupted (verified empirically at 150k rows: duplicate/missing
-    ranks). Two pin strategies, selected by ``SPARK_GRAFT_RANK_PIN``:
+    ranks).
 
-    * ``localcheckpoint`` (default) — cheapest: one write of
-      executor-local, NON-REPLICATED blocks and the lineage is
-      truncated. The fault-tolerance trade (guide §5): on a real
-      cluster an executor loss makes the query FAIL (no lineage to
-      recompute) instead of recomputing — acceptable for short jobs,
-      not for long ones.
-    * ``persist`` — MEMORY_AND_DISK persist + eager count. Slightly
-      more driver work, but lineage is kept: a lost block recomputes
-      through the SAME RDD graph (the RangePartitioner instance and
-      its sampled bounds live in the materialized RDD's
-      ShuffleDependency, so recomputation reuses the original
-      bounds — partitioning stays consistent). Set this on cluster
-      deployments where executor loss must not fail the query.
+    A lazy ``localCheckpoint``: one write of executor-local,
+    NON-REPLICATED blocks and the lineage is truncated. Nothing is
+    registered with the CacheManager — Spark's ContextCleaner frees the
+    blocks once the pinned frame is unreachable, so a call leaves no
+    state behind. The fault-tolerance trade: on a real
+    cluster an executor loss makes the query FAIL (no lineage to
+    recompute) instead of recomputing — acceptable for short jobs,
+    not for long ones.
     """
-    if os.environ.get("SPARK_GRAFT_RANK_PIN", "localcheckpoint").lower() == "persist":
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        return df
     return df.localCheckpoint(eager=False)
 
 
@@ -176,8 +166,7 @@ def with_global_rank(
         return out.drop("__sg_pid")
     # REQUIRED pin, not a perf hint: offsets (collected below) and the
     # local row_numbers must observe the same physical range
-    # partitioning across actions — see _pin for the full argument
-    # and the cluster-mode fault-tolerance knob.
+    # partitioning across actions — see _pin for the full argument.
     ranged = _pin(
         df.repartitionByRange(*order).withColumn("__sg_pid", F.spark_partition_id())
     )
@@ -204,9 +193,7 @@ def with_global_rank(
     # broadcast-join path below, which is unchanged — at 10⁵-partition
     # scale the broadcast join IS the right plan, locally the literal
     # is (the cap is conf'able, not hard-coded to local geometry).
-    cap = int(
-        __import__("os").environ.get("SPARK_GRAFT_RANK_LITERAL_CAP", "4096")
-    )
+    cap = int(os.environ.get("SPARK_GRAFT_RANK_LITERAL_CAP", "4096"))
     rows = sorted(counts.collect(), key=lambda r: r["__sg_pid"])
     exact = len(rows) <= cap and all(
         v is None or (isinstance(v, int) and not isinstance(v, bool))
@@ -355,55 +342,3 @@ def with_global_ntile(
         f"    div (__sg_n div {k}) + 1 end as int)"
     )
     return ranked.withColumn(tile_col, tile).drop("__sg_rank", "__sg_n")
-
-
-def eager_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` (if not already) AND materialize it now.
-
-    Round-11 finding: a lazily-persisted shared frame gives NO sharing
-    across the CONCURRENT branch jobs of one action — AQE launches the
-    broadcast/shuffle-stage jobs of every consumer branch in parallel,
-    each misses the not-yet-built cache, and each re-executes the full
-    lineage (semdedup's centroid-assignment lineage ran 5× per bench
-    run this way: five concurrent ~5 s stages all scanning parquet).
-    One ``count()`` here pays the lineage ONCE and every consumer then
-    reads cached blocks. The count is full-width because the cache
-    materializes whole InMemoryRelation batches, not pruned columns.
-    """
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df = df.persist()
-    df.count()
-    return df
-
-
-def ensure_persisted(df: DataFrame) -> DataFrame:
-    """Re-assert a MEMO-OWNED frame's persist after an external
-    ``spark.catalog.clearCache()`` unpersisted it behind the memo's
-    back (the round-10 BRP canary catch: an unpersisted memo hit
-    re-paid the dedup window per lineage evaluation — 239–300 s vs
-    ~35 s at Zipf). ONE shared implementation so the ownership rule
-    cannot drift between memo sites."""
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df.persist()
-    return df
-
-
-def purge_other_apps(cache: dict, app_id: str) -> None:
-    """Drop memo keys whose applicationId differs from the current
-    one (round-10 advice): every module-level memo keys on
-    ``(applicationId, ...)``, and a long-lived process that restarts
-    its SparkSession would otherwise accumulate DataFrame/weight
-    references bound to dead contexts forever. Call at each memo
-    INSERT site (a key's first element is always the applicationId).
-    No unpersist attempt — the owning context is already gone, and
-    unpersisting through a dead SparkContext raises. Keys are either
-    ``(applicationId, ...)`` tuples or the bare applicationId string
-    (ml.cleaning's one-row memos)."""
-    for key in [
-        k
-        for k in cache
-        if (k[0] if isinstance(k, tuple) else k) != app_id
-    ]:
-        cache.pop(key, None)

@@ -22,12 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from backend_model_spark.operators.scale_utils import (
-    ensure_persisted,
-    purge_other_apps,
-)
+from backend_model_spark.operators.scale_utils import _pin
 from backend_model_spark.sources.tables import load_table, spread
 
 DIM = 64
@@ -1985,12 +1981,6 @@ KMEANS_LLOYD_ORACLE = _kmeans_sql()
 
 SEMDEDUP_TAU_MICRO = 400_000  # cosine ≥ 0.4 — the dedup family's shared gate
 
-# (applicationId, sf_dir) -> (members, assigned) persisted frames —
-# memo OWNS both persists (callers never unpersist); bounded by the
-# same purge-on-insert rule as every other module memo
-_SEMDEDUP_CACHE: dict = {}
-
-
 def _semdedup_parts(spark: SparkSession, sf_dir: str):
     """(members, assigned) — the shared SemDeDup front half.
 
@@ -2008,28 +1998,6 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
     C(g, 2) pairs. Centroids stay FULL-CORPUS means (each member
     contributes), exactly as the direct form computed them.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SEMDEDUP_CACHE.get(key)
-    if got is not None:
-        grouped, assigned = got
-        # an external clearCache() (bench quiesce) unpersists behind
-        # the memo's back — re-assert, or the rollup + pair join each
-        # re-pay the full assignment lineage. Round 12 (verdict ask
-        # #3): check-before-count — when both persists are still
-        # registered the blocks built at memo time are live, so the
-        # hit path costs ZERO actions (r11 re-ran eager_persist on
-        # both frames on every hit: two redundant count() jobs).
-        # After a clearCache, ONE count of `assigned` rebuilds both
-        # caches: its lineage scans every partition of `grouped`
-        # through the re-registered InMemoryRelation.
-        def _live(df):
-            sl = df.storageLevel
-            return sl.useMemory or sl.useDisk
-        if not (_live(grouped) and _live(assigned)):
-            ensure_persisted(grouped)
-            ensure_persisted(assigned)
-            assigned.count()
-        return grouped.select("vec_id", "rep_id", "nz"), assigned
     emb = _as_double(load_table(spark, "embeddings", sf_dir))
     pos = emb.select("label", F.posexplode("v").alias("pos", "x"))
     centroids = (
@@ -2052,13 +2020,12 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
         "aggregate(transform(v, x -> x * x), cast(0.0 as double),"
         " (acc, x) -> acc + x)"
     )
-    # ONE digest-group window, persisted once; both the member view
-    # (rollup side) and the rep view (assignment + pair-join side)
-    # read it — the _EMB_MEMBERS_CACHE shape from the dedup family
-    grouped = (
+    # ONE digest-group window, pinned; both the member view (rollup
+    # side) and the rep view (assignment + pair-join side) read it —
+    # the same shape as dedup.embedding_neardup_pairs
+    grouped = _pin(
         emb.withColumn("rep_id", F.min("vec_id").over(W.partitionBy("v")))
         .select("vec_id", "rep_id", "v", (norm2 > 0).alias("nz"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     members = grouped.select("vec_id", "rep_id", "nz")
     reps = grouped.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id", "v")
@@ -2075,7 +2042,8 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
     # shuffle, no sort. Key (ctr_cos_micro, -c_label) is unique per
     # rep (labels distinct), so the pick is deterministic and
     # identical to ORDER BY ctr_cos_micro DESC, c_label ASC LIMIT 1.
-    assigned = (
+    # pinned: both pair-kernel sides and the member rollup read it
+    assigned = _pin(
         reps.crossJoin(F.broadcast(centroids))
         .withColumn(
             "ctr_cos_micro", F.floor(cos_ctr * 1_000_000 + F.lit(0.5)).cast("long")
@@ -2094,22 +2062,7 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
             F.col("best.c_label").alias("cluster"),
             "ctr_cos_micro",
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    got = (grouped, assigned)
-    purge_other_apps(_SEMDEDUP_CACHE, key[0])
-    _SEMDEDUP_CACHE[key] = got
-    # materialize NOW (round 11): the downstream pair-kernel action
-    # launches its ga/gb/rollup branch jobs concurrently, and a lazy
-    # persist lets each of them re-run the digest-group window + the
-    # centroid-assignment cross join from parquet (measured: five
-    # concurrent ~5 s stages at sf0.1). Round 12 (verdict ask #2):
-    # ONE action, not two — counting `assigned` executes grouped's
-    # full lineage through its InMemoryRelation, so both caches are
-    # built by the same job (the former second count() re-scanned
-    # grouped's cached blocks for nothing: one whole stage+action of
-    # pure overhead per cold build).
-    assigned.count()
     return members, assigned
 
 
@@ -2218,8 +2171,8 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputable in SQL.
 
     Scale: centroids broadcast (K rows); ONE corpus-wide digest-group
-    window + ONE rep-level assignment scan (both memoized per
-    application × corpus); the rep pair join shuffles on cluster id;
+    window + ONE rep-level assignment scan (both pinned for the
+    call); the rep pair join shuffles on cluster id;
     the drop decision is a semi-join shape, never an iterative loop;
     the member rollup is a rep-sized hash join.
     """

@@ -485,7 +485,7 @@ def decontaminate_against_holdout(spark: SparkSession, sf_dir: str) -> DataFrame
     # DISTINCT is per-doc set semantics and doc_id is unique per row,
     # so array_distinct INSIDE the row replaces the global .distinct()
     # exchange on both arms with zero shuffle (guide §2.1; round 11 —
-    # same equivalence as dedup._rep_shingled).
+    # same equivalence as dedup._shingle_index).
     train_sh = with_toks.filter(F.col("source") != HOLDOUT_SOURCE).select(
         "doc_id",
         F.explode(F.array_distinct(F.expr(SHINGLES4))).alias("shingle"),

@@ -24,7 +24,18 @@ HAS_PROTOBUF = ensure_protobuf()
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY", "32g")
+
+def _default_driver_memory() -> str:
+    """A quarter of the host's memory, capped at 32g.
+
+    ``-Xms`` is pinned to this value (see ``_DRIVER_JAVA_OPTS``), so a
+    heap larger than the host can commit stops the JVM at start-up.
+    ``SPARK_DRIVER_MEMORY`` overrides it for a deployment."""
+    mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(32 * 1024, mib // 4)}m"
+
+
+DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
 
 # Round-12 measured lever (guide §5, §7.4): on this round's host the
 # kernel serializes concurrent page faults in a process whenever
@@ -45,17 +56,15 @@ DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY", "32g")
 #                           executor threads are faulting
 # A/B (3 worst headline entries, min-of-3 each, same tree):
 # minhash 17.5→1.3 s, semdedup 5.9→2.9 s, calibration 17.7→2.9 s.
-# Heap sized 32g (was an arbitrary day-1 90g): the suite's working
+# Heap capped at 32g (was an arbitrary day-1 90g): the suite's working
 # set at the test scale factors sits far below it (16g measured
 # slightly GC-tight: window_rfm 2.5 s vs 1.7 s at 32g), a committed
 # 90g heap costs ~90 GB of serialized first-touch faults on this
 # kernel, and anything evicted spills to the (tmpfs) local dir.
-# Env-overridable for other geometries.
-_DRIVER_JAVA_OPTS = os.environ.get(
-    "SPARK_GRAFT_DRIVER_JAVA_OPTS",
+_DRIVER_JAVA_OPTS = (
     f"-Xms{DEFAULT_DRIVER_MEMORY}"
     " -XX:InitialCodeCacheSize=512m -XX:ReservedCodeCacheSize=512m"
-    " -XX:CICompilerCount=4",
+    " -XX:CICompilerCount=4"
 )
 
 # Floor for "is this tmpfs big enough to hold shuffle scratch": local
@@ -120,12 +129,8 @@ def get_spark(
         # scan, tfidf rollups, per-bin pair joins). 256 KB keeps those
         # stages at full local width (A/B: tfidf 1.45→1.03 s, overlap
         # topk 2.0→1.76 s, no regressions) and is INERT at scale,
-        # where bytes/parallelism ≫ any floor. Env-tunable for other
-        # geometries.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"),
-        )
+        # where bytes/parallelism ≫ any floor.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

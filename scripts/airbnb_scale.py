@@ -43,7 +43,7 @@ def run_at(spark, mult: int) -> dict:
         train, test = spark.read.parquet(tp), spark.read.parquet(sp)
 
         # ---- the airbnb_e2e compute shape (union -> counts -> clean
-        # funnel -> one exact-integer rollup), minus the memo/goldens
+        # funnel -> one exact-integer rollup), minus the goldens
         spark.catalog.clearCache()
         t0 = time.time()
         unioned = C.union_train_test(train, test)

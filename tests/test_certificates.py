@@ -622,19 +622,3 @@ def test_airbnb_train_eval_flips_on_shuffled_price(spark):
     assert not (pres.r2 > 0.0), (
         f"shuffled prices must flip test_r2_positive, got {pres.r2}"
     )
-
-
-def test_brp_parts_memo_repersists_after_clearcache(spark, megadup_dir):
-    """Round-10 canary catch: the bench protocol's clearCache()
-    unpersists the memo-owned reps frame; a memo hit must re-assert
-    the persist or every lineage evaluation re-pays the dedup window
-    (measured 239-300 s vs ~35 s at Zipf)."""
-    from backend_model_spark.operators.mllib_ops import _brp_parts
-
-    _, reps1, _, _, _ = _brp_parts(spark, megadup_dir)
-    assert reps1.storageLevel.useMemory or reps1.storageLevel.useDisk
-    spark.catalog.clearCache()
-    assert not (reps1.storageLevel.useMemory or reps1.storageLevel.useDisk)
-    _, reps2, _, _, _ = _brp_parts(spark, megadup_dir)
-    assert reps2 is reps1  # memo hit, not a rebuild
-    assert reps2.storageLevel.useMemory or reps2.storageLevel.useDisk

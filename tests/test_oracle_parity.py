@@ -19,10 +19,54 @@ _ORACLE_NAMES = sorted(_ORACLES)
 _ROWS_ONLY_NAMES = sorted(set(_QUERIES) - set(_ORACLES))
 
 
+# entries whose operators share a frame or a fitted model between the
+# branches of one call: the call must leave no DataFrame.persist entry
+# behind in the CacheManager (shared frames are pinned with
+# scale_utils._pin, which Spark's ContextCleaner frees)
+_SHARED_STAGE_ENTRIES = {
+    "dedup_minhash_lsh_candidates",
+    "dedup_ngram_jaccard",
+    "dedup_containment_pairs",
+    "dedup_lsh_verified",
+    "dedup_lsh_recall",
+    "dedup_graph_pagerank",
+    "dedup_graph_triangles",
+    "dedup_duplicate_clusters",
+    "dedup_keep_list",
+    "dedup_golden_record",
+    "dedup_embedding_neardup",
+    "dedup_embedding_clusters",
+    "dedup_semantic_semdedup",
+    "mllib_brp_ann_join",
+    "ml_gbt_train_eval",
+    "ml_gbt_feature_importance",
+    "ml_mlp_train_distributed",
+    "ml_mlp_train_serve_e2e",
+    "ml_mlp_train_adam",
+    "ml_mlp_train_minibatch",
+    "ml_tuning_grid_champion",
+    "ml_tuning_tpe_champion",
+    "ml_tuning_arch_compare",
+    "ml_tuning_subsample_champion",
+    "pipeline_airbnb_e2e",
+    "pipeline_airbnb_train_eval",
+}
+
+
 @pytest.mark.parametrize("name", _ORACLE_NAMES)
 def test_query_matches_oracle(spark, sf_dir, name):
+    shared = name in _SHARED_STAGE_ENTRIES
+    if shared:
+        spark.catalog.clearCache()
     result = compare(name, spark, _QUERIES[name], _ORACLES[name], sf_dir)
     assert result.ok, str(result)
+    if shared:
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        assert cache_manager.isEmpty(), f"{name} left a persisted frame cached"
+
+
+def test_shared_stage_entries_are_registered():
+    assert _SHARED_STAGE_ENTRIES <= set(_ORACLE_NAMES)
 
 
 def test_no_rows_only_entries_remain():
